@@ -73,7 +73,10 @@ def cosine_topk_arrow(df: DataFrame, query_vec, k: int = 10,
     @F.pandas_udf(DoubleType())
     def cos(emb: pd.Series) -> pd.Series:
         mat = np.vstack(emb.to_numpy())
-        sims = (mat @ q) / (np.linalg.norm(mat, axis=1) * qn)
+        # row-wise multiply+sum, not a BLAS matvec: gemv's rounding depends
+        # on a row's position in the batch, so equal vectors could rank in
+        # either order after a compaction reshuffles the batches
+        sims = (mat * q).sum(axis=1) / (np.linalg.norm(mat, axis=1) * qn)
         return pd.Series(sims)
 
     return (df.select(F.col(id_col), cos(F.col(emb_col)).alias("cosine"))

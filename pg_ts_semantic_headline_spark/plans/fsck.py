@@ -198,13 +198,14 @@ def verify_index(spark: SparkSession, index_dir: str,
     # ---- packed store state ----
     if stale and packed_dir:
         add("packed_state", "warn", "no stale marker", "stale marker set",
-            "packed/ is invalid until compact_index runs; loaders already "
-            "treat it as absent (blockmax disabled)")
+            "packed/ is missing merged docs until compact_index runs; "
+            "loaders already treat it as absent (lean-layout phrase and "
+            "headline reads refuse)")
     elif packed_dir:
         add("packed_state", "ok", "", "packed live")
     else:
         add("packed_state", "ok", "", "no packed store",
-            "lean layout — blockmax unavailable by construction")
+            "built with build_packed=False")
 
     if not deep:
         return spark.createDataFrame(rows, REPORT_SCHEMA)

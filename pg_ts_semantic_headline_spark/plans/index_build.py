@@ -11,10 +11,10 @@ one index directory:
              — columnar row form, directory-partitioned by term bucket so a
              query's term lookup prunes to a handful of files; doc length is
              denormalized to kill the docstats join at query time
-- packed/    bucket=<b>/ term, block_id, base_doc, n_docs, max_tf,
-             max_tf_norm, payload binary — delta+varint compressed blocks of
-             128 docs each (doc-contiguous), with the idf-free per-block
-             impact bound for block-max pruning (impact = idf · max_tf_norm)
+- packed/    bucket=<b>/ term, block_id, base_doc, n_docs, payload binary
+             — delta+varint compressed blocks of 128 docs each
+             (doc-contiguous); on the lean default layout this is the
+             index's single positional copy (phrases, headlines)
 - terms/     term, bucket, df, cf, idf — the dictionary
 - stats/     n_docs, avgdl, config, prep_version — corpus stats + the
              engine's analog of the reference's TSPVector marker domain
@@ -46,7 +46,7 @@ splits a hot term's run across consecutive reducers at doc_id granularity
 chunk". The directory layout is untouched (partitionBy("bucket") at
 write); a (term, block) run split at a range boundary just yields two
 partial packed rows for that block, which the query path treats as
-independent runs (disjoint doc subsets, each with a valid bound).
+independent runs (disjoint doc subsets).
 """
 
 from __future__ import annotations
@@ -59,27 +59,26 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
+from pyspark.sql.types import (BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from .packing import pack_block
 
 K1 = 1.2
 B = 0.75
-# v2: packed payloads carry per-doc dl (scoring needs no join) and the
-# idf-free max_tf_norm bound. v3: tokens/postings rows carry a `gen`
-# (generation) column so doc replaces/deletes resolve by tombstone
-# (doc_id, before_gen) without rewriting the append-only tables, and
-# stats carries (gen, avgdl_packed) — the avgdl the surviving packed
-# bounds were computed with, which the query path scales against the
-# current avgdl to keep bounds valid across incremental merges. The
-# version gate in load_index rejects indexes written under older layouts.
-PREP_VERSION = "tsp-spark-3"
+# v2: packed payloads carry per-doc dl. v3: tokens/postings rows carry a
+# `gen` (generation) column so doc replaces/deletes resolve by tombstone
+# (doc_id, before_gen) without rewriting the append-only tables, and stats
+# carries `gen`. v4: block-max scoring is gone, so packed rows drop their
+# per-block tf bounds and stats drops the packing-time avgdl. The version
+# gate in load_index (and fsck's prep_version check) rejects indexes
+# written under other layouts.
+PREP_VERSION = "tsp-spark-4"
 DEFAULT_BLOCK_SPAN = 128
 
 STATS_SCHEMA = ("n_docs long, avgdl double, config string, "
                 "prep_version string, n_buckets int, block_span int, "
-                "avgdl_packed double, gen int")
+                "gen int")
 
 PACKED_SCHEMA = StructType([
     StructField("term", StringType(), False),
@@ -87,18 +86,8 @@ PACKED_SCHEMA = StructType([
     StructField("block_id", LongType(), False),
     StructField("base_doc", LongType(), False),
     StructField("n_docs", IntegerType(), False),
-    StructField("max_tf", IntegerType(), False),
-    # idf-free impact bound: max over the block's docs of
-    # tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl)). True block-max BM25 impact =
-    # idf(term) · max_tf_norm — the query path multiplies by idf, so the
-    # BUILD never needs the terms dictionary (no join, no broadcast).
-    StructField("max_tf_norm", DoubleType(), False),
     StructField("payload", BinaryType(), False),
 ])
-
-
-def bm25_impact(tf, dl, idf, avgdl):
-    return idf * (tf * (K1 + 1)) / (tf + K1 * (1 - B + B * dl / avgdl))
 
 
 def idf_expr(df_col, n_docs):
@@ -227,35 +216,28 @@ def _file_lineage(spark: SparkSession, out_path: str, observation,
     return rows
 
 
-def _pack_runs(pdf: pd.DataFrame, avgdl: float, block_span: int) -> pd.DataFrame:
+def _pack_runs(pdf: pd.DataFrame, block_span: int) -> pd.DataFrame:
     """Pack every (term, block) run in a frame already sorted by
-    (term, doc_id). Pure numpy/pandas; no idf needed (max_tf_norm bound)."""
-    import numpy as np
-
+    (term, doc_id). Pure numpy/pandas."""
     out = []
     pdf = pdf.reset_index(drop=True)
     block_ids = (pdf["doc_id"] // block_span).to_numpy()
     for (term, block_id), g in pdf.groupby(
             ["term", block_ids], sort=False):
-        tfs = g["tf"].to_numpy()
-        dls = g["dl"].to_numpy(dtype=float)
         base_doc = int(block_id) * block_span
-        payload = pack_block(g["doc_id"].to_numpy(), tfs,
+        payload = pack_block(g["doc_id"].to_numpy(), g["tf"].to_numpy(),
                              g["dl"].to_numpy(), g["positions"].tolist(),
                              base_doc)
-        norms = (tfs * (K1 + 1)) / (tfs + K1 * (1 - B + B * dls / avgdl))
         out.append({
             "term": term, "bucket": int(g["bucket"].iloc[0]),
             "block_id": int(block_id), "base_doc": base_doc,
-            "n_docs": len(g), "max_tf": int(tfs.max()),
-            "max_tf_norm": float(np.max(norms)), "payload": payload,
+            "n_docs": len(g), "payload": payload,
         })
     return pd.DataFrame(out, columns=[
-        "term", "bucket", "block_id", "base_doc", "n_docs", "max_tf",
-        "max_tf_norm", "payload"])
+        "term", "bucket", "block_id", "base_doc", "n_docs", "payload"])
 
 
-def _streaming_packer(avgdl: float, block_span: int):
+def _streaming_packer(block_span: int):
     """mapInPandas kernel over bucket-partitioned, (term, doc_id)-sorted
     postings rows — the SAME physical layout the postings write produces, so
     packing adds ZERO shuffles: every (term, block) run is contiguous within
@@ -275,9 +257,9 @@ def _streaming_packer(avgdl: float, block_span: int):
             emit = pdf[~tail]
             carry = pdf[tail]
             if not emit.empty:
-                yield _pack_runs(emit, avgdl, block_span)
+                yield _pack_runs(emit, block_span)
         if carry is not None and not carry.empty:
-            yield _pack_runs(carry, avgdl, block_span)
+            yield _pack_runs(carry, block_span)
 
     return pack
 
@@ -465,7 +447,6 @@ def build_index(
         metrics["postings_lineage_sec"] = time.time() - t1
 
     # ---- stage: terms dictionary + corpus stats ----
-    avgdl_mem = None
     if "terms" not in done:
         t0 = time.time()
         if corpus_obs is not None:
@@ -475,7 +456,6 @@ def build_index(
             stats_row = analyzed.select(
                 F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")).first()
             n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"])
-        avgdl_mem = avgdl
         terms = (bucketed
                  .groupBy("term")
                  .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"),
@@ -490,7 +470,7 @@ def build_index(
             .write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(paths.terms)
         spark.createDataFrame(
             [(n_docs, avgdl, cfg_name, PREP_VERSION, n_buckets, block_span,
-              avgdl, 0)],
+              0)],
             STATS_SCHEMA,
         ).write.option("compression", INDEX_CODEC).mode("overwrite").parquet(paths.stats)
         metrics["terms_sec"] = time.time() - t0
@@ -502,20 +482,15 @@ def build_index(
                         int((time.time() - t0) * 1000))
         metrics["terms_lineage_sec"] = time.time() - t1
 
-    # ---- stage: packed blocks (delta+varint, block-max metadata) ----
+    # ---- stage: packed blocks (delta+varint) ----
     if build_packed and "packed" not in done:
         t0 = time.time()
-        if avgdl_mem is not None:
-            avgdl = avgdl_mem
-        else:
-            avgdl = float(spark.read.parquet(paths.stats).first()["avgdl"])
         # mapInPandas over the SAME bucket-sorted partitions the postings
         # write used: every (term, block) run is contiguous — no groupBy
-        # shuffle, no terms join (max_tf_norm is idf-free), no repartition
+        # shuffle, no terms join, no repartition
         packed = bucketed.select(
             "term", "bucket", "doc_id", "tf", "dl", "positions"
-        ).mapInPandas(_streaming_packer(avgdl, block_span),
-                      schema=PACKED_SCHEMA)
+        ).mapInPandas(_streaming_packer(block_span), schema=PACKED_SCHEMA)
         pack_obs, pack_aggs = _checksum_observation(
             "packed_lineage", F.concat_ws("|", "term", "block_id"))
         (packed
@@ -545,10 +520,6 @@ class Index:
     n_buckets: int = 32
     block_span: int = DEFAULT_BLOCK_SPAN
     packed: DataFrame | None = None
-    # avgdl the packed max_tf_norm bounds were computed with; blockmax
-    # scales bounds by max(1, avgdl/avgdl_packed) so they stay valid
-    # upper bounds after incremental merges shift avgdl
-    avgdl_packed: float = 0.0
     gen: int = 0
 
 
@@ -735,8 +706,10 @@ def load_index(spark: SparkSession, out_dir: str) -> Index:
             f"index built with prep {stats['prep_version']!r}, "
             f"engine expects {PREP_VERSION!r}")
     # a _stale marker (written by merge_batch/delete_docs BEFORE any other
-    # mutation) means packed/ no longer reflects the row tables: loaders
-    # must behave as if no packed store exists until compact_index repacks
+    # mutation) means packed/ no longer reflects the row tables (merged
+    # docs are missing from it): loaders must behave as if no packed store
+    # exists, so lean-layout positional reads refuse, until compact_index
+    # repacks
     if _path_exists(spark, paths.stale):
         packed = None
     else:
@@ -761,7 +734,6 @@ def load_index(spark: SparkSession, out_dir: str) -> Index:
         n_buckets=int(stats["n_buckets"]),
         block_span=int(stats["block_span"]),
         packed=packed,
-        avgdl_packed=float(stats["avgdl_packed"]),
         gen=int(stats["gen"]),
     )
 
@@ -770,12 +742,12 @@ def index_stats(index: Index) -> DataFrame:
     """One-row introspection frame for a loaded index — the `\\di+`-style
     health check an operator runs before pointing traffic at an index:
     corpus stats from the build manifest (free), live dictionary/postings
-    counts (two count-only column-pruned scans), and the physical mode
-    flags (packed/block-max available, generation).
+    counts (two count-only column-pruned scans), and the physical layout
+    flags (packed store live, generation).
 
     Columns: n_docs, avgdl_e6, n_terms, n_postings, n_buckets,
-    block_span, config, packed (block-max available right now — False
-    while merges left the packed store stale), gen."""
+    block_span, config, packed (packed store readable right now — False
+    while merges left it stale), gen."""
     spark = index.postings.sparkSession
     n_terms = index.terms.count()
     n_postings = index.postings.count()

@@ -16,8 +16,8 @@ Scale notes (the 100 TB contract):
   scan to doc-id IN-literals or block semi-joins BEFORE any
   explode/decode, so the window input is O(candidates × query tf),
   never the corpus.
-- ``proximity_rerank`` = top-`depth` BM25 (the pruned, optionally
-  block-max plan) + min-span over ≤ depth docs: rerank cost is
+- ``proximity_rerank`` = top-`depth` BM25 (the bucket-pruned postings
+  plan) + min-span over ≤ depth docs: rerank cost is
   independent of corpus size, which is the only shape that survives at
   10^12 docs (computing spans corpus-wide before ranking would decode
   every posting).
@@ -490,7 +490,6 @@ def proximity_rerank(
     k: int = 10,
     depth: int = 100,
     alpha: float = 1.0,
-    mode: str = "exact",
 ) -> DataFrame:
     """BM25 top-`depth` candidates reranked by query-term proximity:
 
@@ -511,7 +510,7 @@ def proximity_rerank(
     out_schema = "doc_id long, score double, span int"
     if not terms:
         return spark.createDataFrame([], out_schema)
-    hits = bm25_topk(index, terms, k=depth, mode=mode)
+    hits = bm25_topk(index, terms, k=depth)
     if depth <= 512:
         rows = hits.collect()
         if not rows:
@@ -537,7 +536,6 @@ def rm3_expand(
     query: CompiledQuery | list[str],
     fb_docs: int = 10,
     max_terms: int = 10,
-    mode: str = "exact",
     config: str | None = None,
 ) -> DataFrame:
     """Pseudo-relevance-feedback expansion terms (the RM3 first stage):
@@ -565,7 +563,7 @@ def rm3_expand(
     out_schema = "rank int, term string, fb_tf long, df long"
     if not terms:
         return spark.createDataFrame([], out_schema)
-    fb = bm25_topk(index, terms, k=fb_docs, mode=mode).collect()
+    fb = bm25_topk(index, terms, k=fb_docs).collect()
     ids = [int(r["doc_id"]) for r in fb]
     if not ids:
         return spark.createDataFrame([], out_schema)
@@ -595,7 +593,6 @@ def prf_search(
     k: int = 10,
     fb_docs: int = 10,
     max_terms: int = 10,
-    mode: str = "exact",
 ) -> DataFrame:
     """Full PRF retrieval: expand with `rm3_expand`, then BM25 over the
     union of original + expansion terms (uniform term weights — the
@@ -611,9 +608,8 @@ def prf_search(
         return spark.createDataFrame([], "doc_id long, score double")
     expansion = [r["term"] for r in
                  rm3_expand(index, terms, fb_docs=fb_docs,
-                            max_terms=max_terms, mode=mode).collect()]
-    return bm25_topk(index, sorted(set(terms) | set(expansion)),
-                     k=k, mode=mode)
+                            max_terms=max_terms).collect()]
+    return bm25_topk(index, sorted(set(terms) | set(expansion)), k=k)
 
 
 def ltr_features(

@@ -8,49 +8,20 @@ top-k is the engine addition the north star requires. Scoring:
     s(d,q)  = Σ_t idf(t) · tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl))
     k1=1.2, b=0.75; ties broken by doc_id ascending — fully deterministic.
 
-Two physical strategies, guaranteed rank-identical (tested):
+One physical plan: scan the postings rows for the query terms (bucket-
+pruned), broadcast-join the tiny idf map, hash-aggregate per doc, then
+TakeOrdered k. It is embarrassingly parallel and reads only the skinny
+(term, doc_id, tf, dl) projection. `mode="blockmax"` and `mode="auto"`
+are accepted as aliases of it: a block-max/WAND plan over the packed
+store never beat this scan on any measured corpus (its Python varint
+decode cost more than its pruning saved), so it is not offered.
 
-- exact: scan postings rows for the query terms (bucket-pruned scan),
-  broadcast-join the tiny idf map, hash-aggregate per doc, TakeOrdered k.
-  Embarrassingly parallel; the Spark-natural default.
-- blockmax: classic block-max WAND reshaped for a columnar engine, scoring
-  from the PACKED table only — row postings are never touched. Large
-  segments run three lean actions:
-
-  (A) meta: one bounded collect of the SKINNY block metadata
-      (term, block_id, max_tf_norm — the payload column is never
-      projected, so the columnar scan skips it) plus the idf rows; the
-      driver selects the top-S seed blocks per term and the per-block
-      bound sums S(b).
-  (B) seed: point-lookup decode of the seed payloads (block_id literals →
-      row-group pruning; a few KB), scored driver-side with the
-      vectorized numpy varint kernel (scoring prefix only — positions are
-      never decoded) → θ = kth best partial score.
-  (C) prune + rescore: blocks are doc-ALIGNED across terms (block_id =
-      doc_id // span for every term), so the survival test is the tight
-      per-block SUM S(b) = Σ_t idf(t)·max_tf_norm(t, b) ≥ θ — far
-      stronger than classic WAND's global-upper-bound test: a block where
-      only a low-idf common term occurs is pruned even though the rare
-      term's global bound is huge. ALL query terms' payloads at surviving
-      block ids are decoded by an Arrow mapInPandas kernel, scored
-      exactly, hash-aggregated per doc, TakeOrdered k.
-
-  Correctness: every posting of doc d lives in block b_d = d // span for
-  EVERY term, so score(d) = Σ_t idf_t·tf_norm(t, d) ≤ S(b_d). If
-  score(d) ≥ θ then b_d survives and d is scored EXACTLY in (C). θ is a
-  lower bound of the true kth score (seed partial scores under-estimate k
-  docs' true scores), so the true top-k always survives. At 10^12-doc
-  scale (B) skips decoding the long tail of blocks for stopword-ish code
-  terms ("def", "import"); the payload scan is compressed varints, a
-  fraction of the row-postings bytes.
-
-Phrase verification reuses the *same* pruned postings rows (positions ride
-along), so a phrase query costs no second index scan.
+Phrase verification reads positions from the same pruned postings rows
+when they carry them, else decodes them from the packed store (the lean
+default layout's single positional copy).
 """
 
 from __future__ import annotations
-
-import threading
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -58,7 +29,13 @@ from pyspark.sql import functions as F
 from .index_build import B, K1, Index
 from .query_compiler import CompiledQuery, Node
 
-_BOUNDED_COLLECT_LOCK = threading.Lock()
+#: values `bm25_topk` and `search` accept for `mode`; all run the same plan
+BM25_MODES = ("exact", "blockmax", "auto")
+
+
+def _check_mode(mode: str) -> None:
+    if mode not in BM25_MODES:
+        raise ValueError(f"mode must be one of {BM25_MODES}, got {mode!r}")
 
 
 def _score_col(avgdl: float):
@@ -138,35 +115,6 @@ def _scored(index: Index, terms: list[str]) -> DataFrame:
     rows = _pruned_postings(index, terms)
     return (rows.join(F.broadcast(_idf_lookup(index, terms)), on="term")
                 .withColumn("score", _score_col(index.avgdl)))
-
-
-def choose_bm25_mode(index: Index, terms: list[str],
-                     skew_ratio: float = 100.0,
-                     common_frac: float = 0.05) -> str:
-    """Cost-based physical-strategy pick for `bm25_topk(mode="auto")`.
-
-    The two strategies are rank-identical; what differs is bytes
-    decoded. Measured on this engine (BENCH/BASELINE.md §2c-2d): the
-    lean row scan wins whenever term selectivities are similar (block-max
-    bounds are near-equal, θ prunes nothing, and the seed pass is pure
-    overhead), while per-block-sum pruning wins ~20× in decoded bytes
-    exactly when the query mixes a COMMON term (many blocks) with a RARE
-    one (few blocks survive θ). So: pick blockmax iff a packed store
-    exists AND the widest df is both a real chunk of the corpus
-    (≥ common_frac·n_docs) and ≥ skew_ratio× the narrowest df. The
-    decision costs one bucket-pruned dictionary lookup (≤ |terms| rows
-    to the driver) — the same rows the scoring join reads anyway."""
-    ts = sorted(set(terms))
-    if index.packed is None or len(ts) < 2:
-        return "exact"
-    dfs = [int(r["df"]) for r in
-           _idf_lookup(index, ts, cols=("term", "df")).collect()]
-    if len(dfs) < 2:
-        return "exact"
-    mx, mn = max(dfs), min(dfs)
-    if mx >= common_frac * index.n_docs and mx >= skew_ratio * max(mn, 1):
-        return "blockmax"
-    return "exact"
 
 
 def bm25_topk_federated(
@@ -258,10 +206,10 @@ def search_federated(
 def plan_search(index: Index, query: CompiledQuery | list[str]) -> DataFrame:
     """EXPLAIN for a retrieval: one row per query term with the numbers
     the planner sees — df, idf, corpus fraction, the bucket its postings
-    scan prunes to, whether the term exists at all — plus the auto-mode
-    decision and packed-store availability repeated on every row. Read
-    this before pointing an expensive query at a 10^12-doc index; cost
-    is one bucket-pruned dictionary lookup, nothing else."""
+    scan prunes to, whether the term exists at all — plus packed-store
+    availability repeated on every row. Read this before pointing an
+    expensive query at a 10^12-doc index; cost is one bucket-pruned
+    dictionary lookup, nothing else."""
     from ..functions.xxhash import term_bucket
 
     query = expand_query_prefixes(index, query) \
@@ -269,19 +217,18 @@ def plan_search(index: Index, query: CompiledQuery | list[str]) -> DataFrame:
     spark = index.postings.sparkSession
     schema = ("term string, bucket int, df long, idf double, "
               "corpus_frac double, in_dictionary boolean, "
-              "chosen_mode string, packed boolean")
+              "packed boolean")
     terms = sorted(set(
         query.lexemes if isinstance(query, CompiledQuery) else query))
     if not terms:
         return spark.createDataFrame([], schema)
     known = {r["term"]: (int(r["df"]), float(r["idf"])) for r in
              _idf_lookup(index, terms, cols=("term", "df", "idf")).collect()}
-    mode = choose_bm25_mode(index, terms)
     rows = []
     for t in terms:
         df_, idf_ = known.get(t, (0, None))
         rows.append((t, term_bucket(t, index.n_buckets), df_, idf_,
-                     df_ / max(index.n_docs, 1), t in known, mode,
+                     df_ / max(index.n_docs, 1), t in known,
                      index.packed is not None))
     return spark.createDataFrame(rows, schema)
 
@@ -294,22 +241,15 @@ def bm25_topk(
     candidate_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k (doc_id, score), deterministic order (score desc, doc_id asc).
-    `mode`: "exact", "blockmax", or "auto" (cost-based pick between the
-    two rank-identical strategies — see choose_bm25_mode)."""
+    `mode` is one of BM25_MODES; every value runs the same plan, and any
+    other value raises ValueError."""
+    _check_mode(mode)
     if isinstance(query, CompiledQuery):
         query = expand_query_prefixes(index, query)
     terms = list(query.lexemes) if isinstance(query, CompiledQuery) else list(query)
     if not terms:
         spark = index.postings.sparkSession
         return spark.createDataFrame([], "doc_id long, score double")
-
-    if mode == "auto":
-        mode = choose_bm25_mode(index, terms)
-
-    if mode == "blockmax" and index.packed is not None:
-        return _bm25_topk_blockmax(index, terms, k, candidate_docs)
-    if mode == "blockmax":
-        raise ValueError("blockmax mode requires a packed index (build_packed=True)")
 
     scored = _scored(index, terms)
     if candidate_docs is not None:
@@ -385,7 +325,7 @@ def bm25_topk_batch(
     hash aggregation per (query_id, doc_id); one window per query for the
     top-k cut. Scan cost is paid once for the whole workload instead of
     once per query, and every per-query result is rank-identical to
-    `bm25_topk(mode="exact")` (tested). Ties: score desc, doc_id asc.
+    `bm25_topk` (tested). Ties: score desc, doc_id asc.
 
     `candidates`, when given, is a (query_id, doc_id) frame restricting
     each query's scored set (the boolean-match semi-join `search_batch`
@@ -429,346 +369,6 @@ def _pruned_packed(index: Index, terms: list[str]) -> DataFrame:
     return (index.packed
             .where(F.col("bucket").isin(buckets))
             .where(F.col("term").isin(terms)))
-
-
-def _bm25_part_score(tfs, dls, idf: float, avgdl: float):
-    """Vectorized per-doc partial score for one term (numpy arrays in/out)."""
-    tfs = tfs.astype(float)
-    dls = dls.astype(float)
-    return idf * tfs * (K1 + 1) / (tfs + K1 * (1 - B + B * dls / avgdl))
-
-
-def _score_blocks_col_kernel(avgdl: float):
-    """mapInPandas kernel: decode packed scoring prefixes into
-    (doc_id, part) rows with idf arriving as a COLUMN (pre-joined onto the
-    handful of packed rows — far cheaper than joining the exploded per-doc
-    stream). Needs no driver-side dictionary lookup: used by the
-    single-action small-segment and candidate-filtered paths."""
-    import numpy as np
-    import pandas as pd
-
-    from .packing import decode_block_scores
-
-    def gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            outs_d, outs_s = [], []
-            for payload, base, idf in zip(pdf["payload"], pdf["base_doc"],
-                                          pdf["idf"]):
-                doc_ids, tfs, dls = decode_block_scores(
-                    bytes(payload), int(base))
-                outs_d.append(doc_ids)
-                outs_s.append(_bm25_part_score(tfs, dls, float(idf), avgdl))
-            yield pd.DataFrame({"doc_id": np.concatenate(outs_d),
-                                "part": np.concatenate(outs_s)})
-
-    return gen
-
-
-def _score_blocks_kernel(idf_map: dict, avgdl: float):
-    """mapInPandas kernel: decode packed payload scoring prefixes (numpy
-    varint kernel — positions never decoded) and emit exact per-(term, doc)
-    partial BM25 scores. idf is a tiny per-query dict riding the closure,
-    so the executor side needs no dictionary join."""
-    import numpy as np
-    import pandas as pd
-
-    from .packing import decode_block_scores
-
-    def gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            outs_d, outs_s = [], []
-            idfs = pdf["term"].map(idf_map)
-            for payload, base, idf in zip(pdf["payload"], pdf["base_doc"],
-                                          idfs):
-                doc_ids, tfs, dls = decode_block_scores(
-                    bytes(payload), int(base))
-                outs_d.append(doc_ids)
-                outs_s.append(_bm25_part_score(tfs, dls, float(idf), avgdl))
-            yield pd.DataFrame({"doc_id": np.concatenate(outs_d),
-                                "part": np.concatenate(outs_s)})
-
-    return gen
-
-
-# Driver-side meta fast path bound: below this many (term, block) rows the
-# whole survival computation runs on collected metadata (one bounded
-# collect, zero joins); above it the survival filter stays distributed.
-META_COLLECT_LIMIT = 20_000
-
-# When len(terms)·ceil(n_docs/block_span) — the maximum possible block
-# count for the query — is at or below this, pruning cannot beat simply
-# decoding every block in ONE action (per-action fixed cost exceeds the
-# decode saved). Known driver-side with zero jobs, so small segments take
-# the single-action path and big segments take the 2-action WAND path.
-SMALL_SEGMENT_BLOCKS = 20_000
-# candidate-filtered queries: max candidate doc ids the direct
-# block-targeted plan will collect (a bounded ~8-byte-per-doc driver
-# transfer) before falling back to θ-seeded pruning; negative disables
-FILTERED_DIRECT_DOC_CAP = 16_384
-
-
-def _bounded_collect(df: DataFrame, limit: int) -> list:
-    """collect() of `df.limit(limit)` in ONE job round.
-
-    Spark's executeTake runs limit-collects incrementally — 1 partition,
-    then 4×, then 16×… — each round a separate job. When the rows are
-    spread thin across many partitions (761 candidate ids over 64
-    partitions, or 25k skinny meta rows), that's 4-6 sequential job
-    round-trips of pure scheduling latency on an interactive query path.
-    Raising spark.sql.limit.initialNumPartitions for just this collect
-    makes round one scan every partition: same bounded result, one job.
-
-    The setting is session-global, so set/restore is serialized under a
-    module lock: without it two threads sharing the SparkSession could
-    each read the other's inflated value as "old" and restore 1000000
-    permanently. (An unrelated query running concurrently in the same
-    session still executes under the inflated setting for the duration
-    of this collect — a widened first limit round, never a wrong result.)
-    """
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    with _BOUNDED_COLLECT_LOCK:
-        old = spark.conf.get(key, None)
-        spark.conf.set(key, "1000000")
-        try:
-            return df.limit(limit).collect()
-        finally:
-            if old is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, old)
-
-
-def _topk_from_packed(index: Index, need: DataFrame, terms: list[str],
-                      k: int, candidate_docs: DataFrame | None = None,
-                      idf_map: dict | None = None) -> DataFrame:
-    """Decode `need`'s payloads, score, aggregate per doc, TakeOrdered k.
-    With idf_map (known driver-side, e.g. free from the seed collect) the
-    kernel bakes idf into partial scores; without it, idf joins in-plan
-    (broadcast of the bucket-pruned dictionary) — no extra action."""
-    if idf_map is not None:
-        decoded = (need.select("term", "base_doc", "payload")
-                   .mapInPandas(_score_blocks_kernel(idf_map, index.avgdl),
-                                schema="doc_id long, part double"))
-    else:
-        decoded = (need.join(F.broadcast(_idf_lookup(index, terms)),
-                             on="term")
-                   .select("base_doc", "payload", "idf")
-                   .mapInPandas(_score_blocks_col_kernel(index.avgdl),
-                                schema="doc_id long, part double"))
-    if candidate_docs is not None:
-        decoded = decoded.join(candidate_docs.select("doc_id"),
-                               on="doc_id", how="left_semi")
-    return (decoded.groupBy("doc_id")
-            .agg(F.sum("part").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k))
-
-
-def _bm25_topk_blockmax(index: Index, terms: list[str], k: int,
-                        candidate_docs: DataFrame | None,
-                        seed_blocks_per_term: int = 4) -> DataFrame:
-    """Scale-adaptive (see module docstring). Small segments: ONE action,
-    decode-everything. Large segments: THREE lean actions — skinny-meta
-    collect, point-lookup seed decode (→ θ), pruned rescore. A boolean/
-    phrase prefilter picks between two plans by the filter's selectivity:
-    a SELECTIVE filter's own block ids bound the decode set exactly
-    (blocks are doc-aligned, so every packed row touching a candidate doc
-    lives at a candidate block id) — decode just those blocks, no θ
-    needed, scoring stays exact. A NON-selective filter (e.g. a negation
-    keeping most docs) falls back to θ seeding: seeds are scored in-plan
-    semi-joined to the candidates (the kth candidate-intersected seed
-    partial is a valid filtered θ), and the unfiltered per-block bounds
-    remain upper bounds for filtered docs, so the same survival pruning
-    applies. Everything else stays driver-side — per-action fixed cost
-    dominates interactive query latency, so the action count IS the
-    latency budget."""
-    from .packing import decode_block_scores
-
-    spark = index.postings.sparkSession
-    packed = _pruned_packed(index, terms)
-    theta = 0.0
-    idf_map: dict = {}
-    surviving_ids: list | None = None
-    # stored max_tf_norm bounds were computed with avgdl_packed; if merges
-    # have raised avgdl since, true norms can exceed them by at most
-    # avgdl/avgdl_packed (sup over tf, dl of the norm ratio) — scaling
-    # keeps every bound a valid upper bound. Scoring itself always uses
-    # the exact per-doc (tf, dl) with the CURRENT avgdl.
-    bound_scale = (max(1.0, index.avgdl / index.avgdl_packed)
-                   if index.avgdl_packed else 1.0)
-
-    cand = (candidate_docs.select("doc_id")
-            if candidate_docs is not None else None)
-    max_blocks = len(terms) * (
-        (index.n_docs + index.block_span - 1) // index.block_span)
-    if max_blocks <= SMALL_SEGMENT_BLOCKS:
-        # pruning cannot pay here: one action decodes everything (with a
-        # candidate semi-join when a boolean/phrase prefilter applies)
-        return _topk_from_packed(index, packed, terms, k, cand)
-    if cand is not None:
-        # selective-filter fast path: collect the candidate doc ids
-        # themselves under a bounded limit (ONE evaluation of the
-        # boolean/phrase subplan, nothing persisted). Within budget →
-        # decode ONLY the candidates' blocks (exact scores for every
-        # candidate by doc-aligned block construction: doc d's packed row
-        # for ANY term lives at block ⌊d/span⌋), semi-join the collected
-        # ids, aggregate — a fully-literal point-lookup action with no
-        # meta collect and no θ. Overflow → the filter keeps too many
-        # docs for block-targeting to pay; persist the candidates and
-        # fall through to θ-seeded pruning (the ContextCleaner unpersists
-        # when the result plan is released).
-        cap = FILTERED_DIRECT_DOC_CAP
-        doc_ids = ([int(r["doc_id"])
-                    for r in _bounded_collect(cand, cap + 1)]
-                   if cap >= 0 else [])
-        if cap >= 0 and len(doc_ids) <= cap:
-            cand_lit = spark.createDataFrame(
-                [(d,) for d in sorted(doc_ids)], "doc_id long")
-            blocks = sorted({d // index.block_span for d in doc_ids})
-            if len(blocks) <= 64:
-                # point-lookup: literal block ids reach the parquet scan
-                # as pushed filters → row-group pruning; only the
-                # candidates' payload bytes are ever read
-                need = packed.where(F.col("block_id").isin(blocks))
-                return _topk_from_packed(index, need, terms, k,
-                                         candidate_docs=F.broadcast(cand_lit))
-            # candidates scattered across too many blocks for a literal
-            # point lookup (isin planning cost cliffs, and a semi-join
-            # can't push block ids into the parquet scan, so every
-            # payload byte would be read to decode a few): the skinny
-            # row-postings projection (no positions, no payloads) is the
-            # cheaper scoring source — one JVM-side action
-            scored = (_scored(index, terms)
-                      .join(F.broadcast(cand_lit), on="doc_id",
-                            how="left_semi"))
-            return (scored.groupBy("doc_id")
-                    .agg(F.sum("score").alias("score"))
-                    .orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(k))
-        cand = cand.persist()
-
-    # action A: ONE bounded collect of (a) the SKINNY block metadata for
-    # the query terms — the payload column is never projected, so the
-    # columnar scan reads only (term, block_id, max_tf_norm) — and (b)
-    # the idf dictionary rows, appended via unionByName so no
-    # broadcast-exchange sub-job runs. The LIMIT is the overflow guard:
-    # hot terms whose meta exceeds it fall back to the distributed
-    # survival filter below.
-    meta = (packed
-            .select("term", "block_id", "max_tf_norm")
-            .limit(META_COLLECT_LIMIT))
-    rows = meta.unionByName(
-        _idf_lookup(index, terms)
-        .withColumn("block_id", F.lit(None).cast("long")),
-        allowMissingColumns=True).collect()
-    idf_map = {r["term"]: float(r["idf"]) for r in rows
-               if r["block_id"] is None}
-    meta_rows = [r for r in rows if r["block_id"] is not None]
-    if not meta_rows or not idf_map:
-        return spark.createDataFrame([], "doc_id long, score double")
-    overflowed = len(meta_rows) >= META_COLLECT_LIMIT
-
-    # driver-side seed selection: top-S blocks per term by impact
-    # (ordering by max_tf_norm == ordering by impact — idf is a per-term
-    # constant) plus the per-block bound sums S(b)
-    block_sum: dict = {}
-    per_term: dict = {}
-    for r in meta_rows:
-        t = r["term"]
-        impact = idf_map[t] * float(r["max_tf_norm"]) * bound_scale
-        b = r["block_id"]
-        block_sum[b] = block_sum.get(b, 0.0) + impact
-        per_term.setdefault(t, []).append((-float(r["max_tf_norm"]), b))
-    seed_ids = sorted({
-        b for heap in per_term.values()
-        for _, b in sorted(heap)[:seed_blocks_per_term]})
-
-    # action B: point-lookup decode of the seed payloads (a handful of
-    # block ids → parquet row-group pruning on block_id; payload bytes
-    # read ONLY for these rows) → θ. Unfiltered queries score the seeds
-    # driver-side (tiny collect, numpy kernel); candidate-filtered queries
-    # score them IN-PLAN semi-joined to the candidates — a θ seeded from
-    # unfiltered docs could exceed the kth FILTERED score and prune true
-    # hits, but the kth best candidate-intersected seed partial score is a
-    # valid lower bound of the kth filtered true score.
-    if cand is None:
-        seed_rows = (packed
-                     .where(F.col("block_id").isin(seed_ids))
-                     .select("term", "base_doc", "payload")
-                     .collect())
-        acc: dict = {}
-        for r in seed_rows:
-            doc_ids, tfs, dls = decode_block_scores(
-                bytes(r["payload"]), int(r["base_doc"]))
-            parts = _bm25_part_score(tfs, dls, idf_map[r["term"]], index.avgdl)
-            for d, s in zip(doc_ids.tolist(), parts.tolist()):
-                acc[d] = acc.get(d, 0.0) + s
-        top = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        # θ valid only if k docs seeded; partial seed sums are lower bounds
-        theta = top[-1][1] if len(top) == k else 0.0
-    else:
-        seed_need = packed.where(F.col("block_id").isin(seed_ids))
-        seed_top = _topk_from_packed(index, seed_need, terms, k,
-                                     candidate_docs=cand,
-                                     idf_map=idf_map).collect()
-        theta = float(seed_top[-1]["score"]) if len(seed_top) == k else 0.0
-
-    # ULP slack: S(b) and θ are floats computed with different operation
-    # orders (driver sum-of-products vs build-time norm × query kernel); an
-    # exact tie pruned by a 1-ULP shortfall would break rank identity, so
-    # survival tests compare against θ minus a tiny slack (weakens pruning
-    # infinitesimally, never correctness)
-    theta_slack = theta - 1e-9 - abs(theta) * 1e-12
-
-    if theta > 0.0 and not overflowed:
-        # survival entirely driver-side: blocks are doc-ALIGNED across
-        # terms, so block b survives iff S(b) = Σ_t idf·mtn(t, b) ≥ θ —
-        # the tight per-block sum, not classic WAND's loose global bound
-        surviving_ids = sorted(
-            b for b, s in block_sum.items() if s >= theta_slack)
-        if len(surviving_ids) >= max(1, int(0.8 * len(block_sum))):
-            surviving_ids = None  # pruning buys nothing; skip the filter
-
-    # action B: decode ALL query terms' payloads at surviving block ids
-    # (the exact rescore set — blocks are doc-aligned), aggregate,
-    # TakeOrdered k.
-    need = packed
-    if surviving_ids is not None:
-        # literal IN planning/codegen cost grows steeply with list size
-        # (measured: ~5 s per query at 2,000 literals on this Spark) —
-        # beyond a few dozen ids a broadcast semi-join plans in constant
-        # time
-        if len(surviving_ids) <= 64:
-            need = packed.where(F.col("block_id").isin(surviving_ids))
-        else:
-            ids_df = spark.createDataFrame(
-                [(int(b),) for b in surviving_ids], "block_id long")
-            need = packed.join(F.broadcast(ids_df), on="block_id",
-                               how="left_semi")
-    elif theta > 0.0 and overflowed:
-        # meta overflowed the driver bound: the SAME per-block-sum
-        # survival computed in-plan (θ stays valid — fewer seeds only
-        # lowers it). idf is a driver literal map; the dictionary rows
-        # were never truncated.
-        idf_lit = F.create_map(
-            *[F.lit(x) for t in idf_map for x in (t, idf_map[t])])
-        surviving = (packed
-                     .select("term", "block_id", "max_tf_norm")
-                     .groupBy("block_id")
-                     .agg(F.sum(idf_lit[F.col("term")]
-                                * F.col("max_tf_norm")
-                                * F.lit(bound_scale)).alias("s"))
-                     .where(F.col("s") >= F.lit(theta_slack))
-                     .select("block_id"))
-        need = packed.join(surviving, on="block_id", how="left_semi")
-
-    return _topk_from_packed(index, need, terms, k, candidate_docs=cand,
-                             idf_map=idf_map)
 
 
 def _positions_hay(index: Index, terms: list[str],
@@ -951,6 +551,12 @@ def _required_lexemes(node: Node | None) -> set[str]:
     return set()
 
 
+# matching_docs: an anchor term with at most this many docs is small enough
+# to broadcast its doc/block ids into the packed position decode, so only
+# the anchor's blocks are decoded
+FILTERED_DIRECT_DOC_CAP = 16_384
+
+
 def matching_docs(index: Index, query: CompiledQuery) -> DataFrame:
     """Boolean @@ filter: docs satisfying the query's AND/OR/NOT tree, with
     phrase nodes requiring exact positional adjacency.
@@ -1044,11 +650,13 @@ def search(
 ) -> DataFrame:
     """Full retrieval: boolean/phrase filter → BM25 top-k.
 
-    Returns (doc_id, score) in deterministic rank order.
+    Returns (doc_id, score) in deterministic rank order. `mode` as in
+    `bm25_topk`.
     """
+    _check_mode(mode)
     query = expand_query_prefixes(index, query)  # once, for both stages
     cands = matching_docs(index, query) if enforce_boolean else None
-    return bm25_topk(index, query, k=k, mode=mode, candidate_docs=cands)
+    return bm25_topk(index, query, k=k, candidate_docs=cands)
 
 
 def search_batch(
@@ -1137,7 +745,6 @@ def search_with_headlines(
     query: CompiledQuery,
     k: int = 10,
     options: str = "",
-    mode: str = "exact",
 ) -> DataFrame:
     """Top-k + whole-phrase highlighted headline per hit (the fast path over
     the persisted index: position lookup + recall-array slicing only).
@@ -1152,7 +759,7 @@ def search_with_headlines(
     # expand prefixes up front: the headline stage must highlight the
     # concrete expansions, not the raw ':*' lexeme
     query = expand_query_prefixes(index, query)
-    hits = search(index, query, k=k, mode=mode)
+    hits = search(index, query, k=k)
     spark = index.postings.sparkSession
     if k <= 512:
         rows = hits.collect()
@@ -1197,7 +804,6 @@ def hybrid_search_rrf(
     k: int = 10,
     depth: int = 100,
     k_rrf: int = 60,
-    mode: str = "exact",
     ann=None,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
@@ -1221,7 +827,7 @@ def hybrid_search_rrf(
 
     from ..operators.similarity import cosine_topk
 
-    lex = bm25_topk(index, query, k=depth, mode=mode)
+    lex = bm25_topk(index, query, k=depth)
     w_lex = Window.orderBy(
         F.desc(F.round(F.col("score") * 10000).cast("long")),
         F.asc("doc_id"))
@@ -1406,7 +1012,6 @@ def more_like_this(
     k: int = 10,
     max_terms: int = 10,
     exclude_doc_id: int | None = None,
-    mode: str = "exact",
     config: str | None = None,
 ) -> DataFrame:
     """"More like this": rank the corpus by BM25 similarity to a free-text
@@ -1418,9 +1023,8 @@ def more_like_this(
     a bucket-pruned dictionary lookup), then term ascending. All-integer
     selection is deterministic and reproducible in plain SQL — no
     cross-engine float-tie risk in which terms get picked. The selected
-    terms feed the normal `bm25_topk` plan (exact or blockmax), so
-    retrieval cost is one pruned postings scan no matter how long the
-    source document is.
+    terms feed the normal `bm25_topk` plan, so retrieval cost is one
+    pruned postings scan no matter how long the source document is.
 
     `exclude_doc_id` drops the source itself when it is part of the
     corpus. Returns (doc_id, score) in rank order (score desc, doc_id
@@ -1442,7 +1046,7 @@ def more_like_this(
         return spark.createDataFrame([], "doc_id long, score double")
     selected = sorted(present, key=lambda t: (-tf[t], dfs[t], t))[:max_terms]
     fetch = k + 1 if exclude_doc_id is not None else k
-    top = bm25_topk(index, selected, k=fetch, mode=mode)
+    top = bm25_topk(index, selected, k=fetch)
     if exclude_doc_id is not None:
         top = (top.where(F.col("doc_id") != int(exclude_doc_id))
                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
@@ -1598,7 +1202,6 @@ def fuzzy_bm25_topk(
     words: list[str],
     k: int = 10,
     threshold: float = 0.25,
-    mode: str = "exact",
     config: str | None = None,
 ) -> DataFrame:
     """BM25 top-k with typo tolerance: query words missing from the index
@@ -1651,7 +1254,7 @@ def fuzzy_bm25_topk(
             threshold, dropped)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    return bm25_topk(index, sorted(set(terms)), k=k, mode=mode)
+    return bm25_topk(index, sorted(set(terms)), k=k)
 
 
 def _expand_lexized_full(index: Index, lx: str,
@@ -1809,7 +1412,6 @@ def prefix_search(
     prefix: str,
     k: int = 10,
     max_expansions: int = 32,
-    mode: str = "exact",
     config: str | None = None,
 ) -> DataFrame:
     """tsquery prefix matching (`'pre':*`) as retrieval: every dictionary
@@ -1825,4 +1427,4 @@ def prefix_search(
     terms = expand_prefix(index, prefix, max_expansions, config=config)
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    return bm25_topk(index, sorted(terms), k=k, mode=mode)
+    return bm25_topk(index, sorted(terms), k=k)

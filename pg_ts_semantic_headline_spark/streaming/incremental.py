@@ -5,15 +5,17 @@ trigger (/root/reference/development_schema.sql:18-34). The Spark-native
 analog is Structured Streaming: a stream of new documents is folded into the
 persisted index with `foreachBatch`, each micro-batch running the same
 deterministic build pipeline over just the batch — plus a targeted
-compaction job that restores block-max mode without a full rebuild.
+compaction job that brings the packed store back up to date without a
+full rebuild.
 
 Merge protocol (`merge_batch`):
 
 1. a `_stale` marker row is written FIRST: from that instant loaders treat
-   the index as packed=None (block-max refuses, exact mode sees
-   everything), because merged docs are absent from packed metadata and
-   the stored bounds bake the pre-merge avgdl. The packed files themselves
-   are KEPT on disk — on lean layouts they are the only positional copy of
+   the index as packed=None, because merged docs are absent from packed/.
+   BM25 scores from the row postings and sees everything; on lean layouts
+   positional reads (phrases, headlines) refuse until compaction, rather
+   than silently miss the merged docs. The packed files themselves are
+   KEPT on disk — on lean layouts they are the only positional copy of
    the pre-merge corpus, and compaction reads them back.
 2. tokens/postings rows for the batch are appended under the existing
    layouts, stamped with the new generation number; on lean layouts the
@@ -23,21 +25,19 @@ Merge protocol (`merge_batch`):
    batch doc: loaders drop shadowed older-generation rows via a broadcast
    join, so a re-ingested doc is visible exactly once without rewriting
    the append-only tables.
-4. terms/stats are re-aggregated from the (tombstone-filtered) postings;
-   `avgdl_packed` is carried forward unchanged — it keys the bound scale
-   the query path applies until the next compaction.
+4. terms/stats are re-aggregated from the (tombstone-filtered) postings.
 
 `delete_docs` is the pure-delete variant (tombstones + wildcard marker).
 
 `compact_index` is the targeted repack: it rebuilds packed blocks for ONLY
 the buckets the markers name (decoding the old packed payloads + pending
 rows, dropping tombstoned docs), physically rewrites tokens/postings only
-when tombstones exist, then clears pending/markers/tombstones — block-max
-mode is restored without re-analyzing a single document. `full=True`
-repacks every bucket with the current avgdl (resetting the bound scale
-to 1). Compaction is an offline maintenance job (the reference analog of
-VACUUM): concurrent readers keep seeing packed=None until the marker is
-removed last, but the tokens/postings swap is not snapshot-isolated.
+when tombstones exist, then clears pending/markers/tombstones — the
+packed store is live again without re-analyzing a single document.
+`full=True` repacks every bucket. Compaction is an offline maintenance
+job (the reference analog of VACUUM): concurrent readers keep seeing
+packed=None until the marker is removed last, but the tokens/postings
+swap is not snapshot-isolated.
 
 `merge_batch` is the foreachBatch body and is directly unit-testable without
 a streaming runtime; `attach_incremental_indexer` wires it to a stream.
@@ -102,12 +102,11 @@ def _try_parquet(spark: SparkSession, path: str) -> DataFrame | None:
 
 
 def _write_stats(spark: SparkSession, paths: IndexPaths, n_docs: int,
-                 avgdl: float, stats_row, *, avgdl_packed: float,
-                 gen: int) -> None:
+                 avgdl: float, stats_row, *, gen: int) -> None:
     spark.createDataFrame(
         [(n_docs, avgdl, stats_row["config"], stats_row["prep_version"],
           int(stats_row["n_buckets"]), int(stats_row["block_span"]),
-          float(avgdl_packed), int(gen))],
+          int(gen))],
         STATS_SCHEMA,
     ).write.option("compression", INDEX_CODEC).mode("overwrite").parquet(paths.stats)
 
@@ -132,9 +131,7 @@ def _reaggregate(spark: SparkSession, paths: IndexPaths, stats_row,
                   F.first("bucket").alias("bucket"))
              .withColumn("idf", idf_expr(F.col("df"), n_docs)))
     terms.write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(paths.terms)
-    _write_stats(spark, paths, n_docs, avgdl, stats_row,
-                 avgdl_packed=float(stats_row["avgdl_packed"]),
-                 gen=new_gen)
+    _write_stats(spark, paths, n_docs, avgdl, stats_row, gen=new_gen)
 
 
 def _write_stale_marker(spark: SparkSession, paths: IndexPaths,
@@ -235,8 +232,8 @@ def merge_batch(
                 "tombstones would be silent no-ops, so refusing the "
                 "whole batch")
 
-    # marker FIRST: any reader from here on sees packed=None, never new
-    # rows scored against stale block metadata
+    # marker FIRST: any reader from here on sees packed=None, never a
+    # packed store that is missing the batch
     _write_stale_marker(spark, paths, touched, new_gen)
 
     analyzed.select("doc_id", "tokens", "dl", "sha256") \
@@ -287,7 +284,7 @@ def upsert_documents(
     content the index already holds — the sha256 recall column doubles as
     a change detector, so a mostly-unchanged re-crawl (the common case at
     corpus scale) costs one column-pruned (doc_id, sha256) scan and
-    leaves the index — including its packed block-max store — untouched
+    leaves the index — including its packed store — untouched
     when nothing changed. Changed doc_ids are replaced (tombstone + new
     generation, merge_batch semantics); unseen doc_ids append.
 
@@ -339,7 +336,7 @@ def upsert_documents(
         for r in flagged.groupBy("_status").count().collect():  # ≤ 3 rows
             report[r["_status"]] = int(r["count"])
         if report["changed"] + report["new"] == 0:
-            # no gen bump, no stale marker: blockmax stays live
+            # no gen bump, no stale marker: the packed store stays live
             return report
         ids_df = (flagged.where(F.col("_status") != "unchanged")
                   .select(F.col("doc_id").alias(doc_id)))
@@ -469,13 +466,11 @@ def _decode_packed_rows(tomb_ids: set):
 def compact_index(spark: SparkSession, index_dir: str,
                   full: bool = False,
                   postings_partitions: int | None = None) -> list[int]:
-    """Targeted repack: restore block-max mode after merges/deletes by
-    rebuilding packed blocks for ONLY the buckets the stale markers name
-    (no document is re-analyzed), physically dropping tombstoned rows,
-    then clearing pending/markers/tombstones. Returns the repacked bucket
-    list. `full=True` repacks every bucket with the CURRENT avgdl,
-    resetting the query-side bound scale to 1 (do this when avgdl has
-    drifted far enough that the scale hurts pruning)."""
+    """Targeted repack: bring the packed store back after merges/deletes
+    by rebuilding packed blocks for ONLY the buckets the stale markers
+    name (no document is re-analyzed), physically dropping tombstoned
+    rows, then clearing pending/markers/tombstones. Returns the repacked
+    bucket list. `full=True` repacks every bucket, stale or not."""
     t0 = time.time()
     paths = IndexPaths(index_dir)
     stats = spark.read.parquet(paths.stats).first()
@@ -551,25 +546,12 @@ def compact_index(spark: SparkSession, index_dir: str,
                 rows, spark.read.parquet(paths.tombstones))
         src = rows.select("term", "bucket", "doc_id", "tf", "dl", "positions")
 
-    # the bounds of untouched buckets keep their original avgdl_packed, so
-    # targeted repacks MUST use the same avgdl (one global scale stays a
-    # valid upper-bound correction); a full repack re-baselines
-    avgdl_packed = float(stats["avgdl_packed"])
-    if full:
-        tokens = spark.read.parquet(paths.tokens)
-        if live_tombs:
-            from ..plans.index_build import _apply_tombstones
-            tokens = _apply_tombstones(
-                tokens, spark.read.parquet(paths.tombstones))
-        row = tokens.select(F.avg("dl").alias("a")).first()
-        avgdl_packed = float(row["a"] or 0.0)
-
     sort_parts = (postings_partitions if postings_partitions is not None
                   else spark.sparkContext.defaultParallelism * 2)
     repacked = (src
                 .repartitionByRange(sort_parts, "bucket", "term", "doc_id")
                 .sortWithinPartitions("bucket", "term", "doc_id")
-                .mapInPandas(_streaming_packer(avgdl_packed, block_span),
+                .mapInPandas(_streaming_packer(block_span),
                              schema=PACKED_SCHEMA))
     # stage to a temp dir (the job READS paths.packed — Spark rightly
     # refuses a self-overwrite), then swap ONLY the repacked buckets'
@@ -621,7 +603,7 @@ def compact_index(spark: SparkSession, index_dir: str,
     _delete_path(spark, paths.tombstones)
 
     # refresh stats/dictionary (n_docs/avgdl exclude dropped docs; gen is
-    # preserved; avgdl_packed per the repack baseline above)
+    # preserved)
     tokens = spark.read.parquet(paths.tokens)
     srow = tokens.select(F.count("*").alias("n"),
                          F.avg("dl").alias("a")).first()
@@ -633,7 +615,7 @@ def compact_index(spark: SparkSession, index_dir: str,
              .withColumn("idf", idf_expr(F.col("df"), n_docs)))
     terms.write.option("compression", INDEX_CODEC).mode("overwrite").partitionBy("bucket").parquet(paths.terms)
     _write_stats(spark, paths, n_docs, float(srow["a"] or 0.0), stats,
-                 avgdl_packed=avgdl_packed, gen=int(stats["gen"]))
+                 gen=int(stats["gen"]))
 
     # marker removed LAST: readers keep seeing packed=None until every
     # write above is complete

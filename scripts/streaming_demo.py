@@ -7,7 +7,7 @@ end-to-end on real testdata:
                                   CROSS-batch exact + substring dedup,
                                   kept rows folded into a BM25 index)
       → percolate_stream         (standing queries alert per batch)
-      → compact_index            (restore block-max after the merges)
+      → compact_index            (repack the merged docs)
       → bm25 / search            (query the continuously-built index)
 
 Run:  python scripts/streaming_demo.py [sf_dir]   (default sf0.01)
@@ -109,13 +109,12 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
                    f"{sum(c for _, c in alerts)} matches "
                    f"over {len(alerts)} batches")[1])
 
-    # the merged index answers queries; compaction restores block-max
+    # the merged index answers queries; compaction repacks the merged docs
     stage("compact merged index",
           lambda: f"repacked buckets: {compact_index(spark, idx_dir)}")
     index = load_index(spark, idx_dir)
-    stage("bm25 over streamed index (blockmax)",
-          lambda: bm25_topk(index, ["spark", "window"], k=10,
-                            mode="blockmax").count())
+    stage("bm25 over streamed index",
+          lambda: bm25_topk(index, ["spark", "window"], k=10).count())
     stage("websearch over streamed index",
           lambda: search(index, websearch_to_tspquery(
               "simple", '"merge sort" or window'), k=10).count())

@@ -72,6 +72,27 @@ def test_corrupt_stats_detected(spark, index_dir):
     assert rep["stats_n_docs"]["status"] == "fail"
 
 
+def test_old_prep_version_refused(spark, index_dir):
+    """An index written under an older layout must be refused by the
+    loader and flagged by fsck, naming both versions."""
+    from pg_ts_semantic_headline_spark.plans.index_build import (
+        PREP_VERSION, load_index)
+
+    row = spark.read.parquet(f"{index_dir}/stats").collect()[0].asDict()
+    row["prep_version"] = "tsp-spark-3"
+    spark.createDataFrame([tuple(row.values())],
+                          list(row.keys())).write.mode("overwrite") \
+        .parquet(f"{index_dir}/stats")
+    with pytest.raises(ValueError) as err:
+        load_index(spark, index_dir)
+    assert "tsp-spark-3" in str(err.value)
+    assert PREP_VERSION in str(err.value)
+    rep = _report(spark, index_dir)
+    assert rep["prep_version"]["status"] == "fail"
+    assert rep["prep_version"]["expected"] == PREP_VERSION
+    assert rep["prep_version"]["actual"] == "tsp-spark-3"
+
+
 def test_lost_file_detected(spark, index_dir):
     victim = sorted(glob.glob(f"{index_dir}/postings/*/*.parquet"))[0]
     os.remove(victim)

@@ -14,7 +14,8 @@ from pg_ts_semantic_headline_spark.plans.packing import pack_block, unpack_block
 from pg_ts_semantic_headline_spark.plans.query_compiler import (
     phraseto_tspquery, to_tspquery)
 from pg_ts_semantic_headline_spark.plans.search import (
-    bm25_topk, matching_docs, phrase_match_docs, search_with_headlines)
+    bm25_topk, matching_docs, phrase_match_docs, search,
+    search_with_headlines)
 
 CONFIG = "simple"
 VOCAB = ("spark index query batch stream merge sort join filter scan "
@@ -191,46 +192,69 @@ class TestBM25:
         for (_, gs), (_, ws) in zip(got, want):
             assert abs(gs - ws) < 1e-9
 
-    @pytest.mark.parametrize("terms,k", [
-        (["spark"], 5),
-        (["spark", "query", "window"], 10),
-        (["needle", "phrase", "target"], 9),
-        (["spark", "index", "batch", "merge"], 200),
+    @pytest.mark.parametrize("mode", ["exact", "blockmax", "auto"])
+    def test_mode_aliases_run_one_plan(self, lean_index, mode):
+        """Every accepted `mode` is an alias of the one BM25 plan."""
+        def ranks(rows):
+            return [(r["doc_id"], round(r["score"], 10)) for r in rows]
+
+        terms = ["spark", "snowflake"]
+        want = ranks(bm25_topk(lean_index, terms, k=10).collect())
+        assert want
+        assert ranks(bm25_topk(lean_index, terms, k=10,
+                               mode=mode).collect()) == want
+        q = to_tspquery(CONFIG, "needle & !unique")
+        want = ranks(search(lean_index, q, k=7).collect())
+        assert want
+        assert ranks(search(lean_index, q, k=7, mode=mode).collect()) == want
+
+    def test_unknown_mode_raises(self, lean_index):
+        with pytest.raises(ValueError, match="blokmax"):
+            bm25_topk(lean_index, ["spark"], k=5, mode="blokmax")
+        with pytest.raises(ValueError, match="blokmax"):
+            search(lean_index, to_tspquery(CONFIG, "spark"), k=5,
+                   mode="blokmax")
+
+
+class TestPlanShape:
+    """Job-count ceilings for the BM25 plan: a change that makes a query
+    launch more Spark jobs fails here instead of silently adding per-job
+    scheduling latency. Each ceiling is the count the same call launched
+    with mode="exact" before block-max scoring was removed (local[4],
+    AQE on, the lean test index)."""
+
+    @staticmethod
+    def _jobs(spark, fn) -> int:
+        import uuid
+
+        sc = spark.sparkContext
+        group = f"plan-shape-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    @pytest.mark.parametrize("terms,ceiling", [
+        (["spark"], 3),
+        (["spark", "window"], 3),
     ])
-    def test_blockmax_rank_identical_to_exact(self, index, terms, k):
-        exact = [(r["doc_id"], round(r["score"], 10)) for r in
-                 bm25_topk(index, terms, k=k, mode="exact").collect()]
-        pruned = [(r["doc_id"], round(r["score"], 10)) for r in
-                  bm25_topk(index, terms, k=k, mode="blockmax").collect()]
-        assert exact == pruned
+    def test_bm25_topk_jobs(self, spark, lean_index, terms, ceiling):
+        n = self._jobs(spark, lambda: bm25_topk(
+            lean_index, terms, k=10).collect())
+        assert 0 < n <= ceiling
 
-    def _assert_blockmax_matches_exact(self, index, terms, k):
-        exact = [(r["doc_id"], round(r["score"], 10)) for r in
-                 bm25_topk(index, terms, k=k, mode="exact").collect()]
-        pruned = [(r["doc_id"], round(r["score"], 10)) for r in
-                  bm25_topk(index, terms, k=k, mode="blockmax").collect()]
-        assert exact == pruned
-
-    def test_blockmax_seed_prune_path_rank_identical(self, index, monkeypatch):
-        """Force the large-segment 2-action WAND path (the test corpus is
-        small enough to normally take the single-action decode path)."""
-        from pg_ts_semantic_headline_spark.plans import search as searchmod
-        monkeypatch.setattr(searchmod, "SMALL_SEGMENT_BLOCKS", 0)
-        self._assert_blockmax_matches_exact(
-            index, ["spark", "query", "window"], 5)
-        self._assert_blockmax_matches_exact(index, ["needle", "phrase"], 7)
-        self._assert_blockmax_matches_exact(index, ["unique"], 3)
-
-    def test_blockmax_meta_overflow_fallback_rank_identical(
-            self, index, monkeypatch):
-        """Hot-term meta past the driver collect bound must take the
-        distributed survival path and still be rank-identical (the in-plan
-        ub recompute guards against truncated-meta under-estimates)."""
-        from pg_ts_semantic_headline_spark.plans import search as searchmod
-        monkeypatch.setattr(searchmod, "SMALL_SEGMENT_BLOCKS", 0)
-        monkeypatch.setattr(searchmod, "META_COLLECT_LIMIT", 4)
-        self._assert_blockmax_matches_exact(
-            index, ["spark", "query", "window"], 10)
+    @pytest.mark.parametrize("raw,ceiling", [
+        ("spark & query", 7),
+        ("needle & !unique", 7),
+        ("needle <-> phrase <-> target", 10),
+    ])
+    def test_search_jobs(self, spark, lean_index, raw, ceiling):
+        q = to_tspquery(CONFIG, raw)
+        n = self._jobs(spark, lambda: search(lean_index, q, k=10).collect())
+        assert 0 < n <= ceiling
 
 
 class TestLeanIndexPositionsFromPacked:
@@ -290,29 +314,6 @@ class TestSearch:
         q = to_tspquery(CONFIG, "unique | snowflake")
         got = {r["doc_id"] for r in matching_docs(index, q).collect()}
         assert got == {13}
-
-    @pytest.mark.parametrize("direct_cap", [16_384, -1],
-                             ids=["direct-blocks", "theta-seeded"])
-    def test_filtered_blockmax_rank_identical(self, lean_index, monkeypatch,
-                                              direct_cap):
-        """Candidate-filtered queries on the forced large-segment path must
-        stay rank-identical to filtered exact on BOTH physical plans: the
-        selective-filter direct block-targeted decode (default cap) and
-        the θ-seeded prune route (cap forced to -1 so every candidate set
-        overflows it — seeds scored in-plan ∩ candidates)."""
-        from pg_ts_semantic_headline_spark.plans import search as searchmod
-        from pg_ts_semantic_headline_spark.plans.search import search
-        monkeypatch.setattr(searchmod, "SMALL_SEGMENT_BLOCKS", 0)
-        monkeypatch.setattr(searchmod, "FILTERED_DIRECT_DOC_CAP", direct_cap)
-        for raw, k in [("spark & query", 10), ("needle & !unique", 7),
-                       ("batch & !unique", 25)]:
-            q = to_tspquery(CONFIG, raw)
-            ex = [(r["doc_id"], round(r["score"], 10)) for r in
-                  search(lean_index, q, k=k, mode="exact").collect()]
-            bm = [(r["doc_id"], round(r["score"], 10)) for r in
-                  search(lean_index, q, k=k, mode="blockmax").collect()]
-            assert ex == bm
-            assert ex, raw  # non-vacuous
 
     def test_search_with_headlines(self, index):
         q = phraseto_tspquery(CONFIG, "needle phrase target")
@@ -1210,34 +1211,8 @@ class TestPrefixSearch:
             assert expand_prefix(eng, "the") == []
 
 
-class TestAutoMode:
-    def test_choose_mode_decisions(self, lean_index, index, corpus):
-        from pg_ts_semantic_headline_spark.plans.search import (
-            choose_bm25_mode)
-
-        # 'spark' is the Zipf head (in nearly every doc); 'snowflake'
-        # appears in one doc — the common+rare shape pruning pays for
-        assert choose_bm25_mode(lean_index, ["spark", "snowflake"],
-                                skew_ratio=10.0) == "blockmax"
-        # similar selectivities: bounds are near-equal, θ prunes nothing
-        assert choose_bm25_mode(lean_index, ["merge", "sort"]) == "exact"
-        # single term / degenerate queries stay on the lean row scan
-        assert choose_bm25_mode(lean_index, ["spark"]) == "exact"
-        assert choose_bm25_mode(lean_index, ["absentterm",
-                                             "spark"]) == "exact"
-
-    def test_auto_rank_identical(self, lean_index, corpus):
-        got = bm25_topk(lean_index, ["spark", "snowflake"], k=10,
-                        mode="auto").collect()
-        want = bm25_topk(lean_index, ["spark", "snowflake"], k=10,
-                         mode="exact").collect()
-        assert [(r["doc_id"], round(r["score"], 9)) for r in got] \
-            == [(r["doc_id"], round(r["score"], 9)) for r in want]
-
-
 def test_plan_search_explains_terms(lean_index, corpus):
-    from pg_ts_semantic_headline_spark.plans.search import (
-        choose_bm25_mode, plan_search)
+    from pg_ts_semantic_headline_spark.plans.search import plan_search
 
     post, _ = python_postings(corpus)
     rows = {r["term"]: r for r in plan_search(
@@ -1248,9 +1223,6 @@ def test_plan_search_explains_terms(lean_index, corpus):
     assert 0 < rows["spark"]["corpus_frac"] <= 1.0
     assert not rows["absentterm"]["in_dictionary"]
     assert rows["absentterm"]["df"] == 0 and rows["absentterm"]["idf"] is None
-    expected_mode = choose_bm25_mode(
-        lean_index, ["spark", "snowflake", "absentterm"])
-    assert {r["chosen_mode"] for r in rows.values()} == {expected_mode}
 
 
 def test_headlines_over_websearch_query(lean_index, corpus):

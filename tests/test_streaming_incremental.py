@@ -59,10 +59,10 @@ def test_merge_replace_refuses_uncastable_doc_ids(spark, index_dir):
 
 
 def test_merge_invalidates_packed_blocks(spark, tmp_path):
-    """A merge must not leave stale block-max metadata behind: merged docs
-    are absent from packed meta (never block-max candidates) and stored
-    bounds bake the pre-merge avgdl. After a merge, packed is gone —
-    blockmax refuses, exact sees the new docs; a resume build repacks."""
+    """A merge must not leave a stale packed store visible: merged docs
+    are absent from packed/. After a merge, packed is gone — BM25 scores
+    from the row postings and sees the new docs, positional reads refuse
+    until compaction."""
     out = str(tmp_path / "idx_packed")
     df = spark.createDataFrame(BASE, ["doc_id", "content"])
     build_index(spark, df, out, config=CONFIG, n_buckets=4,
@@ -74,9 +74,7 @@ def test_merge_invalidates_packed_blocks(spark, tmp_path):
 
     after = load_index(spark, out)
     assert after.packed is None
-    with pytest.raises(ValueError, match="packed"):
-        bm25_topk(after, ["fresh"], k=5, mode="blockmax")
-    top = bm25_topk(after, ["fresh"], k=5, mode="exact").collect()
+    top = bm25_topk(after, ["fresh"], k=5).collect()
     assert {r["doc_id"] for r in top} == {100, 101}
     # default (lean) layout: packed was the only positional copy, so a
     # positional query after the merge must direct to compaction instead
@@ -87,8 +85,8 @@ def test_merge_invalidates_packed_blocks(spark, tmp_path):
 
 
 class TestCompaction:
-    """Targeted repack: merges/deletes/replaces are folded back into
-    block-max form without re-analyzing any document."""
+    """Targeted repack: merges/deletes/replaces are folded back into the
+    packed store without re-analyzing any document."""
 
     def _build(self, spark, tmp_path, n_buckets=16):
         out = str(tmp_path / "idxc")
@@ -97,13 +95,38 @@ class TestCompaction:
                     block_span=8, build_packed=True)
         return out
 
-    def _assert_rank_identical(self, index, terms, k=10):
-        exact = [(r["doc_id"], round(r["score"], 10)) for r in
-                 bm25_topk(index, terms, k=k, mode="exact").collect()]
-        pruned = [(r["doc_id"], round(r["score"], 10)) for r in
-                  bm25_topk(index, terms, k=k, mode="blockmax").collect()]
-        assert exact == pruned
-        return exact
+    def _assert_packed_matches_postings(self, index, terms, k=10):
+        """What compaction must deliver for the queried terms: the packed
+        store decodes to exactly the live postings' (term, doc_id, tf, dl)
+        rows, and the BM25 top-k equals the one recomputed from those
+        decoded rows. Returns the top-k as (doc_id, score)."""
+        from pg_ts_semantic_headline_spark.plans.index_build import B, K1
+        from pg_ts_semantic_headline_spark.plans.packing import (
+            decode_block_scores)
+
+        packed = []
+        for r in index.packed.where(F.col("term").isin(terms)).collect():
+            doc_ids, tfs, dls = decode_block_scores(
+                bytes(r["payload"]), r["base_doc"])
+            packed += [(r["term"], int(d), int(tf), int(dl))
+                       for d, tf, dl in zip(doc_ids, tfs, dls)]
+        live = [(r["term"], r["doc_id"], r["tf"], r["dl"]) for r in
+                index.postings.where(F.col("term").isin(terms))
+                .select("term", "doc_id", "tf", "dl").collect()]
+        assert sorted(packed) == sorted(live) and live
+
+        idf = {r["term"]: r["idf"] for r in
+               index.terms.where(F.col("term").isin(terms)).collect()}
+        scores: dict = {}
+        for t, d, tf, dl in sorted(packed):
+            scores[d] = scores.get(d, 0.0) + idf[t] * (tf * (K1 + 1)) / (
+                tf + K1 * (1 - B + B * dl / index.avgdl))
+        want = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+        got = [(r["doc_id"], r["score"]) for r in
+               bm25_topk(index, terms, k=k).collect()]
+        assert [d for d, _ in got] == [d for d, _ in want]
+        assert all(abs(g - w) < 1e-9 for (_, g), (_, w) in zip(got, want))
+        return got
 
     def test_compact_restores_blockmax_with_merged_docs(self, spark, tmp_path):
         from pg_ts_semantic_headline_spark.streaming import compact_index
@@ -118,7 +141,7 @@ class TestCompaction:
 
         after = load_index(spark, out)
         assert after.packed is not None and after.n_docs == 22
-        got = self._assert_rank_identical(after, ["fresh"], k=5)
+        got = self._assert_packed_matches_postings(after, ["fresh"], k=5)
         assert {d for d, _ in got} == {100, 101}
         # positions were repacked too: phrase search finds the merged doc
         q = phraseto_tspquery(CONFIG, "needle phrase target")
@@ -136,7 +159,7 @@ class TestCompaction:
         compact_index(spark, out)
         final = load_index(spark, out)
         assert final.n_docs == 23
-        got = self._assert_rank_identical(final, ["zeta"], k=3)
+        got = self._assert_packed_matches_postings(final, ["zeta"], k=3)
         assert {d for d, _ in got} == {200}
 
     def test_replace_doc(self, spark, tmp_path):
@@ -160,7 +183,7 @@ class TestCompaction:
         compact_index(spark, out)
         after = load_index(spark, out)
         assert after.n_docs == 20 and after.packed is not None
-        got = self._assert_rank_identical(after, ["brandnew"], k=5)
+        got = self._assert_packed_matches_postings(after, ["brandnew"], k=5)
         assert {d for d, _ in got} == {5}
         # physical apply: shadowed generations are gone from the tables
         assert spark.read.parquet(f"{out}/tokens").count() == 20
@@ -182,7 +205,7 @@ class TestCompaction:
         compact_index(spark, out)
         after = load_index(spark, out)
         assert after.n_docs == 19 and after.packed is not None
-        got = self._assert_rank_identical(after, ["alpha"], k=25)
+        got = self._assert_packed_matches_postings(after, ["alpha"], k=25)
         assert 3 not in {d for d, _ in got}
         assert spark.read.parquet(f"{out}/tokens").count() == 19
 
@@ -202,40 +225,13 @@ class TestCompaction:
         compact_index(spark, out)
         after = load_index(spark, out)
         assert after.n_docs == 17 and after.packed is not None
-        got = self._assert_rank_identical(after, ["alpha"], k=25)
+        got = self._assert_packed_matches_postings(after, ["alpha"], k=25)
         assert {d for d, _ in got} & {3, 7, 11} == set()
         assert spark.read.parquet(f"{out}/tokens").count() == 17
         # positions survived the anti-join repack
         q = phraseto_tspquery(CONFIG, "alpha beta gamma")
         assert 3 not in {r["doc_id"] for r in
                          phrase_match_docs(after, q).collect()}
-
-    def test_bound_scale_keeps_rank_identity_after_avgdl_shift(
-            self, spark, tmp_path, monkeypatch):
-        """A targeted compact keeps the OLD avgdl baked into every bound;
-        merging much longer docs raises the corpus avgdl, so true norms
-        can exceed stored bounds — the query-side scale must keep the
-        forced-prune path rank-identical."""
-        from pg_ts_semantic_headline_spark.plans import search as searchmod
-        from pg_ts_semantic_headline_spark.streaming import compact_index
-        out = self._build(spark, tmp_path)
-        long_docs = [(300 + i,
-                      "alpha beta " + " ".join(f"filler{j}" for j in range(80)))
-                     for i in range(4)]
-        merge_batch(spark, out, spark.createDataFrame(
-            long_docs, ["doc_id", "content"]), config=CONFIG)
-        compact_index(spark, out)
-        after = load_index(spark, out)
-        assert after.avgdl > after.avgdl_packed  # scale is actually > 1
-        monkeypatch.setattr(searchmod, "SMALL_SEGMENT_BLOCKS", 0)
-        self._assert_rank_identical(after, ["alpha", "beta"], k=24)
-        self._assert_rank_identical(after, ["alpha"], k=10)
-
-        # full compact re-baselines the bounds to the current avgdl
-        compact_index(spark, out, full=True)
-        rebased = load_index(spark, out)
-        assert abs(rebased.avgdl_packed - rebased.avgdl) < 1e-9
-        self._assert_rank_identical(rebased, ["alpha", "beta"], k=24)
 
 
 def test_windowed_term_counts_stream(spark, tmp_path):
@@ -347,7 +343,7 @@ def test_merge_batch_config_defaults_and_guards(spark, tmp_path_factory):
 
 class TestUpsertDocuments:
     """sha256-gated re-crawl ingestion: unchanged batches are free and
-    leave blockmax live; changed docs replace; new docs append."""
+    leave the packed store live; changed docs replace; new docs append."""
 
     @staticmethod
     def _build(spark, tmp, docs):
@@ -372,7 +368,7 @@ class TestUpsertDocuments:
         assert rep == {"unchanged": 2, "changed": 0, "new": 0}
         idx = load_index(spark, out)
         assert idx.gen == gen_before
-        assert idx.packed is not None  # blockmax still live: no merge ran
+        assert idx.packed is not None  # packed still live: no merge ran
 
     def test_changed_and_new_docs(self, spark, tmp_path_factory):
         from pg_ts_semantic_headline_spark.plans.index_build import (
